@@ -23,7 +23,13 @@ Stage outputs are parquet directories named by their key — immutable
 once written, safe to share across sessions, garbage-collectable by
 key age. A stage's Spark plan is read back from parquet on reuse, so
 downstream stages of a cached stage start from a pruned columnar scan
-rather than a re-derived lineage.
+rather than a re-derived lineage. Each ledger row also carries the
+read-back schema of its parquet and the listing fingerprint of its
+files, so that read skips Spark's schema inference while the files are
+the ones ledgered: a cache hit launches no Spark job at all. An in-memory
+frame's content fingerprint is computed once per live DataFrame object
+(re-scanned only when the frame's input-file listing changes), so
+re-running a pipeline over the same session pays no aggregation either.
 """
 
 from __future__ import annotations
@@ -32,9 +38,12 @@ import hashlib
 import json
 import os
 import time
+import uuid
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _canon(obj) -> str:
@@ -143,6 +152,23 @@ def _local_file(uri: str) -> str | None:
     return path if os.path.exists(path) else None
 
 
+def _input_listing(df: DataFrame) -> list[tuple]:
+    """``(uri, size, mtime_ns, inode)`` of every input file of ``df``'s
+    plan, sorted by uri — the frame's identity on disk, read from the
+    driver's file index and ``os.stat`` (no Spark job). Remote and
+    vanished files carry ``None`` for the three stat fields (URI-only
+    identity, see ``_local_file``). Empty for an in-memory frame."""
+    out = []
+    for uri in sorted(df.inputFiles()):
+        local = _local_file(uri)
+        if local is None:
+            out.append((uri, None, None, None))
+        else:
+            st = os.stat(local)
+            out.append((uri, st.st_size, st.st_mtime_ns, st.st_ino))
+    return out
+
+
 def content_fp_exprs(df: DataFrame) -> list:
     """The two aggregate columns behind ``content_fingerprint`` —
     exposed so a caller can piggyback them on an action it already
@@ -165,16 +191,34 @@ def content_fp_from(n, h) -> str:
     return hashlib.sha256(f"{n}:{h}".encode()).hexdigest()[:16]
 
 
+# DataFrame object -> (input listing, fingerprint); an entry dies with
+# its frame
+_FP_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def content_fingerprint(df: DataFrame) -> str:
     """ACTUAL-content fingerprint of a DataFrame: row count + the sum of
     per-row ``xxhash64`` over all columns (order-independent — sum
-    commutes — and overflow-safe via decimal accumulation). Costs ONE
-    aggregation job over the frame; use it to root a pipeline at an
-    in-memory table whose lineage can't identify it (see
-    ``frame_source``). Sized for dimension tables — for a fact table
-    prefer a listing fingerprint of its backing files."""
+    commutes — and overflow-safe via decimal accumulation). Use it to
+    root a pipeline at an in-memory table whose lineage can't identify
+    it (see ``frame_source``).
+
+    The first call on a frame object costs ONE aggregation job over the
+    frame; the value is then memoized per object, and a repeat call
+    launches no job unless the listing of its input files changed (an
+    input file rewritten in place, touched, or gone), which re-scans.
+    The value itself stays content-derived: a fresh frame over the same
+    data gets the same fingerprint, so keys are shared across sessions.
+    Sized for dimension tables — for a fact table prefer a listing
+    fingerprint of its backing files."""
+    listing = _input_listing(df)
+    hit = _FP_MEMO.get(df)
+    if hit is not None and hit[0] == listing:
+        return hit[1]
     row = df.agg(*content_fp_exprs(df)).collect()[0]
-    return content_fp_from(row["_n"], row["_h"])
+    fp = content_fp_from(row["_n"], row["_h"])
+    _FP_MEMO[df] = (listing, fp)
+    return fp
 
 
 @dataclass(frozen=True)
@@ -272,8 +316,9 @@ class PipelineManifest:
           string contains NO data, only schema + expression ids, so two
           sessions could collide on the same key for DIFFERENT data.
           The default is therefore ``content_fingerprint`` (one
-          aggregation job over the frame — pass an explicit fingerprint
-          to skip it for large frames).
+          aggregation job the first time a frame object is seen,
+          memoized after that — pass an explicit fingerprint to skip it
+          for large frames).
 
         ``meta`` attaches caller metadata (small JSON-safe dict) to the
         ledger entry on FIRST materialization — e.g. a content
@@ -285,33 +330,21 @@ class PipelineManifest:
         aggregates), which costs no extra job. Like ``meta`` it is
         skipped entirely on cache hits."""
         if fingerprint is None:
-            plan = df._jdf.queryExecution().analyzed().toString()
-            files = sorted(df.inputFiles())
-            if files:
+            listing = _input_listing(df)
+            if listing:
+                plan = df._jdf.queryExecution().analyzed().toString()
                 h = hashlib.sha256(plan.encode())
-                for uri in files:
+                for uri, size, mtime_ns, ino in listing:
                     h.update(b"|f:" + uri.encode())
-                    local = _local_file(uri)
-                    if local is not None:
-                        st = os.stat(local)
-                        h.update(
-                            f":{st.st_size}:{st.st_mtime_ns}:{st.st_ino}"
-                            .encode()
-                        )
+                    if size is not None:
+                        h.update(f":{size}:{mtime_ns}:{ino}".encode())
                 fingerprint = h.hexdigest()[:16]
             else:
                 fingerprint = content_fingerprint(df)
         key = f"frm-{fingerprint}"
         out_dir = os.path.join(self.root, key)
-        marker = os.path.join(out_dir, "_SUCCESS")
-        if key in self._entries and os.path.exists(marker):
-            return StageRef(
-                name=name,
-                key=key,
-                df=self.spark.read.parquet(out_dir),
-                path=out_dir,
-                from_cache=True,
-            )
+        if self._hit(key, out_dir):
+            return self._ref(name, key, out_dir, from_cache=True)
         won = self._publish(df, out_dir)
         entry = {
             "key": key,
@@ -329,15 +362,7 @@ class PipelineManifest:
             meta = merged
         if meta:
             entry["meta"] = meta
-        if won or key not in self._entries:
-            self._append(entry)
-        return StageRef(
-            name=name,
-            key=key,
-            df=self.spark.read.parquet(out_dir),
-            path=out_dir,
-            from_cache=not won,
-        )
+        return self._record(entry, won)
 
     # -- stages ----------------------------------------------------------
 
@@ -381,18 +406,10 @@ class PipelineManifest:
         cv = code_version if code_version is not None else _fn_fingerprint(fn)
         key = self.stage_key(name, inputs, params, cv)
         out_dir = os.path.join(self.root, key)
-        marker = os.path.join(out_dir, "_SUCCESS")
-        if key in self._entries and os.path.exists(marker):
-            return StageRef(
-                name=name,
-                key=key,
-                df=self.spark.read.parquet(out_dir),
-                path=out_dir,
-                from_cache=True,
-            )
+        if self._hit(key, out_dir):
+            return self._ref(name, key, out_dir, from_cache=True)
         df = fn(self.spark, *[i.df for i in inputs], **params)
         won = self._publish(df, out_dir)
-        out = self.spark.read.parquet(out_dir)
         entry = {
             "key": key,
             "name": name,
@@ -402,11 +419,51 @@ class PipelineManifest:
             "path": out_dir,
             "written_at": time.time(),
         }
-        if won or key not in self._entries:
-            self._append(entry)
-        return StageRef(
-            name=name, key=key, df=out, path=out_dir, from_cache=not won
+        return self._record(entry, won)
+
+    def _hit(self, key: str, out_dir: str) -> bool:
+        """A complete cached output exists for ``key``."""
+        return key in self._entries and os.path.exists(
+            os.path.join(out_dir, "_SUCCESS")
         )
+
+    def _read(self, key: str, path: str) -> DataFrame:
+        """The parquet at ``path`` read with the schema recorded in
+        ``key``'s ledger row — no schema-inference job. The schema is
+        trusted only while ``path`` holds the files it was recorded
+        with (their ``source_fingerprint``, a driver-side listing); a
+        row without one (none yet, or written before schemas were
+        recorded) or whose files were rewritten since is read with
+        inference."""
+        e = self._entries.get(key) or {}
+        reader = self.spark.read
+        if e.get("schema") and e.get("files") == source_fingerprint(path):
+            schema = StructType.fromJson(json.loads(e["schema"]))
+            reader = reader.schema(schema)
+        return reader.parquet(path)
+
+    def _ref(
+        self, name: str, key: str, path: str, from_cache: bool
+    ) -> StageRef:
+        return StageRef(
+            name=name,
+            key=key,
+            df=self._read(key, path),
+            path=path,
+            from_cache=from_cache,
+        )
+
+    def _record(self, entry: dict, won: bool) -> StageRef:
+        """Read a just-published output back and ledger it (with its
+        read-back schema and file listing) unless a concurrent run
+        already did."""
+        key, path = entry["key"], entry["path"]
+        ref = self._ref(entry["name"], key, path, from_cache=not won)
+        if won or key not in self._entries:
+            entry["schema"] = ref.df.schema.json()
+            entry["files"] = source_fingerprint(path)
+            self._append(entry)
+        return ref
 
     def _publish(self, df: DataFrame, out_dir: str) -> bool:
         """Materialize ``df`` at ``out_dir`` atomically: write to a
@@ -417,11 +474,12 @@ class PipelineManifest:
         key, same bytes semantically). A leftover dir WITHOUT a
         ``_SUCCESS`` marker (a run killed mid-write, before this
         rename discipline's temp dir even — or a torn temp) is swept
-        first. Returns False when another run won the rename. Local
+        first. Returns False when another run won the rename, i.e. the
+        rename failed and ``out_dir`` now holds a ``_SUCCESS`` marker;
+        any other rename failure is raised, naming ``out_dir``. Local
         filesystem semantics (POSIX atomic rename); an object-store
         root would need a conditional-put equivalent."""
         import shutil
-        import uuid
 
         marker = os.path.join(out_dir, "_SUCCESS")
         if os.path.isdir(out_dir) and not os.path.exists(marker):
@@ -431,9 +489,15 @@ class PipelineManifest:
             df.write.mode("overwrite").parquet(tmp)
             os.rename(tmp, out_dir)
             return True
-        except OSError:
+        except OSError as exc:
             shutil.rmtree(tmp, ignore_errors=True)
-            return False
+            if os.path.exists(marker):
+                return False
+            raise OSError(
+                exc.errno,
+                f"cannot publish stage output {out_dir}: "
+                f"{exc.strerror or exc}",
+            ) from exc
 
     def _append(self, entry: dict) -> None:
         self._entries[entry["key"]] = entry
@@ -465,13 +529,7 @@ class PipelineManifest:
             return None
         if not os.path.exists(os.path.join(e["path"], "_SUCCESS")):
             return None
-        return StageRef(
-            name=e.get("name", ""),
-            key=key,
-            df=self.spark.read.parquet(e["path"]),
-            path=e["path"],
-            from_cache=True,
-        )
+        return self._ref(e.get("name", ""), key, e["path"], from_cache=True)
 
     def entries_named(self, name: str) -> list[dict]:
         """All ledger rows named ``name`` whose parquet still exists,
@@ -513,13 +571,7 @@ class PipelineManifest:
                 best = e
         if best is None:
             return None
-        return StageRef(
-            name=name,
-            key=best["key"],
-            df=self.spark.read.parquet(best["path"]),
-            path=best["path"],
-            from_cache=True,
-        )
+        return self._ref(name, best["key"], best["path"], from_cache=True)
 
     # -- introspection ---------------------------------------------------
 
@@ -563,7 +615,9 @@ class PipelineManifest:
         """Remove cached stage outputs whose key is not in
         ``keep_keys`` (nor an ancestor of one). Returns removed keys.
         Ledger entries for removed outputs are dropped so a later
-        identical stage recomputes cleanly."""
+        identical stage recomputes cleanly. The ledger is rewritten to
+        a sibling temp file and swapped in with ``os.replace``, so a
+        failed rewrite leaves the old ledger whole."""
         import shutil
 
         keep = set(keep_keys)
@@ -577,7 +631,14 @@ class PipelineManifest:
                     shutil.rmtree(path, ignore_errors=True)
                 del self._entries[k]
                 removed.append(k)
-        with open(os.path.join(self.root, self._LEDGER), "w") as fh:
-            for e in self._entries.values():
-                fh.write(json.dumps(e) + "\n")
+        ledger = os.path.join(self.root, self._LEDGER)
+        tmp = f"{ledger}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        try:
+            with open(tmp, "w") as fh:
+                for e in self._entries.values():
+                    fh.write(json.dumps(e) + "\n")
+            os.replace(tmp, ledger)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
         return removed

@@ -712,10 +712,11 @@ class MethylSession:
         cur = refs["signal"] = manifest.frame_source(
             "signal", self.signal, source_fingerprint
         )
-        # masks root: content-hashed (one small aggregate — masks are
-        # dimension-sized next to the signal), since an in-memory masks
-        # table has no lineage identity (frame_source docstring); the
-        # no-masks case gets a constant key
+        # masks root: content-hashed (one small aggregate on the first
+        # call for this session, memoized per frame after that — masks
+        # are dimension-sized next to the signal), since an in-memory
+        # masks table has no lineage identity (frame_source docstring);
+        # the no-masks case gets a constant key
         if self.masks is not None:
             from pylluminator_spark.plans.manifest import content_fingerprint
 

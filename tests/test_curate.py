@@ -104,6 +104,28 @@ def test_second_run_is_all_cache(spark, docs, tmp_path):
     assert a.equals(b)
 
 
+def test_unchanged_path_rerun_launches_one_job(
+    spark, docs, tmp_path, count_jobs
+):
+    """A cache-hit re-run reads every stage with the schema its ledger
+    row recorded: the only job left is the schema inference of the
+    external parquet source itself."""
+    src = str(tmp_path / "docs.parquet")
+    docs.write.parquet(src)
+    kw = dict(
+        keep_lang="aa", min_tokens=5, max_tokens=10_000, pack_budget=40,
+        langid_buckets=256, fuzzy=True,
+    )
+    first = curate_pipeline(spark, str(tmp_path / "m"), src, **kw)
+    want = first.documents.toPandas().sort_values("doc_id")
+    with count_jobs() as jobs:
+        second = curate_pipeline(spark, str(tmp_path / "m"), src, **kw)
+    assert jobs["n"] <= 1
+    assert all(second.from_cache.values()), second.from_cache
+    got = second.documents.toPandas().sort_values("doc_id")
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
+
+
 def test_param_change_recomputes_only_downstream(spark, docs, tmp_path):
     root = str(tmp_path / "m")
     _run(spark, docs, root)

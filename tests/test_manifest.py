@@ -351,3 +351,216 @@ def test_concurrent_same_key_publish_loser_reads_winner(spark, tmp_path):
     assert leftovers == []
     m3 = PipelineManifest(spark, root)
     assert m3.entry(winner.key) is not None
+
+
+# ---------------------------------------------------------------------------
+# cache hits launch no Spark job: the once-per-frame content fingerprint
+# and schema-carrying stage reads
+# ---------------------------------------------------------------------------
+
+
+def _write_atomically(path, text):
+    """Replace ``path`` by a new file (new inode) holding ``text``."""
+    tmp = f"{path}.new"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def test_content_fingerprint_is_memoized_per_frame(
+    spark, tmp_path, count_jobs
+):
+    from pylluminator_spark.plans.manifest import content_fingerprint
+
+    src = str(tmp_path / "kv.csv")
+    _write_atomically(src, "1,x\n2,y\n")
+    df = spark.read.schema("k int, v string").csv(src)
+    with count_jobs() as first:
+        fp = content_fingerprint(df)
+    assert first["n"] >= 1
+    with count_jobs() as again:
+        assert content_fingerprint(df) == fp
+    assert again["n"] == 0
+    # content-derived: a fresh frame over the same data (file-backed or
+    # in memory) gets the same value, so cross-session keys do not move
+    fresh = spark.read.schema("k int, v string").csv(src)
+    assert content_fingerprint(fresh) == fp
+    same = spark.createDataFrame([(2, "y"), (1, "x")], "k int, v string")
+    assert content_fingerprint(same) == fp
+
+
+def test_content_fingerprint_memo_tracks_inplace_rewrite(
+    spark, tmp_path, count_jobs
+):
+    from pylluminator_spark.plans.manifest import content_fingerprint
+
+    src = str(tmp_path / "kv.csv")
+    _write_atomically(src, "1,x\n2,y\n")
+    df = spark.read.schema("k int, v string").csv(src)
+    fp = content_fingerprint(df)
+    _write_atomically(src, "3,z\n4,w\n")  # same size, new content
+    with count_jobs() as jobs:
+        fp2 = content_fingerprint(df)
+    assert jobs["n"] >= 1 and fp2 != fp
+    want = spark.createDataFrame([(3, "z"), (4, "w")], "k int, v string")
+    assert fp2 == content_fingerprint(want)
+
+
+def _ledger_rows(root):
+    import json
+
+    with open(os.path.join(root, "ledger.jsonl")) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _small_chain(spark, root):
+    docs = spark.createDataFrame(
+        [("aa", 10), ("bb", 3), ("aa", 7)], "lang string, n_chars int"
+    )
+    m = PipelineManifest(spark, root)
+    src = m.frame_source("docs", docs, "v1")
+    s1 = m.stage("stats", _stats_fn, [src], {"min_chars": 0})
+    s2 = m.stage("share", _share_fn, [s1], {})
+    return src, s1, s2
+
+
+def test_ledger_rows_carry_readback_schema(spark, tmp_path, count_jobs):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    root = str(tmp_path / "m")
+    src, s1, s2 = _small_chain(spark, root)
+    rows = _ledger_rows(root)
+    assert {r["key"] for r in rows} == {src.key, s1.key, s2.key}
+    for r in rows:
+        recorded = StructType.fromJson(json.loads(r["schema"]))
+        assert recorded == spark.read.parquet(r["path"]).schema, r["name"]
+    # every cache-hit read path of a fresh manifest launches no job
+    m = PipelineManifest(spark, root)
+    with count_jobs() as jobs:
+        hits = [
+            # the explicit fingerprint is the frame's identity: a hit
+            # never looks at the frame passed in
+            m.frame_source("docs", spark.range(1), "v1"),
+            m.stage("stats", _stats_fn, [src], {"min_chars": 0}),
+            m.by_key(s2.key),
+            m.latest("share"),
+        ]
+    assert jobs["n"] == 0
+    assert all(h.from_cache for h in hits)
+    want = [src.df.schema, s1.df.schema, s2.df.schema, s2.df.schema]
+    assert [h.df.schema for h in hits] == want
+
+
+def test_schema_less_ledger_rows_still_hit(spark, tmp_path):
+    """Ledger rows written before schemas were recorded are read with
+    schema inference: still a cache hit, same rows."""
+    import json
+
+    root = str(tmp_path / "m")
+    src, s1, s2 = _small_chain(spark, root)
+    want = sorted(tuple(r) for r in s2.df.collect())
+    rows = _ledger_rows(root)
+    with open(os.path.join(root, "ledger.jsonl"), "w") as fh:
+        for r in rows:
+            r.pop("schema")
+            fh.write(json.dumps(r) + "\n")
+    m = PipelineManifest(spark, root)
+    r1 = m.stage("stats", _stats_fn, [src], {"min_chars": 0})
+    r2 = m.stage("share", _share_fn, [r1], {})
+    assert r1.from_cache and r2.from_cache
+    assert r1.key == s1.key and r2.key == s2.key
+    assert sorted(tuple(r) for r in r2.df.collect()) == want
+
+
+def test_rewritten_stage_parquet_is_read_with_its_own_schema(spark, tmp_path):
+    """A recorded schema is trusted only for the files it was recorded
+    with: parquet rewritten under a ledger row (a restore, an older
+    format) is read with inference, never through the stale schema."""
+    import shutil
+
+    root = str(tmp_path / "m")
+    src, s1, _ = _small_chain(spark, root)
+    shutil.rmtree(s1.path)
+    spark.createDataFrame([("cc", 5)], "lang string, k int").write.parquet(
+        s1.path
+    )
+    ref = PipelineManifest(spark, root).by_key(s1.key)
+    assert ref.df.columns == ["lang", "k"]
+    assert [tuple(r) for r in ref.df.collect()] == [("cc", 5)]
+
+
+def test_gc_failed_ledger_rewrite_keeps_old_ledger(
+    spark, tmp_path, monkeypatch
+):
+    """gc rewrites the ledger beside the old one and swaps it in: a
+    write that dies part-way leaves the old ledger byte-identical and
+    no temp file behind."""
+    import json
+
+    import pytest
+
+    root = str(tmp_path / "m")
+    src, s1, s2 = _small_chain(spark, root)
+    m = PipelineManifest(spark, root)
+    orphan = m.stage("stats", _stats_fn, [src], {"min_chars": 8})
+    ledger = os.path.join(root, "ledger.jsonl")
+    with open(ledger, "rb") as fh:
+        before = fh.read()
+    dumps, calls = json.dumps, {"n": 0}
+
+    def dying_dumps(obj, *a, **kw):
+        calls["n"] += 1
+        if calls["n"] > 1:
+            raise RuntimeError("disk gone")
+        return dumps(obj, *a, **kw)
+
+    monkeypatch.setattr(json, "dumps", dying_dumps)
+    with pytest.raises(RuntimeError, match="disk gone"):
+        m.gc({s2.key})
+    monkeypatch.undo()
+    with open(ledger, "rb") as fh:
+        assert fh.read() == before
+    assert [f for f in os.listdir(root) if ".tmp-" in f] == []
+    # the kept chain still hits; gc then completes normally
+    m2 = PipelineManifest(spark, root)
+    assert m2.stage("share", _share_fn, [s1], {}).from_cache
+    assert m2.gc({s2.key}) == [orphan.key]
+    assert {r["key"] for r in _ledger_rows(root)} == {src.key, s1.key, s2.key}
+
+
+def test_publish_rename_failure_is_raised_naming_out_dir(
+    spark, tmp_path, monkeypatch
+):
+    """Only a rename that lost to a concurrent publisher (``out_dir``
+    now complete) is a lost race; any other rename failure raises with
+    the output dir named, and leaves no temp dir or ledger row."""
+    import errno
+
+    import pytest
+
+    root = str(tmp_path / "m")
+    docs = spark.createDataFrame([("aa", 10)], "lang string, n_chars int")
+    m = PipelineManifest(spark, root)
+    src = m.frame_source("docs", docs, "v1")
+
+    def failing_rename(a, b):
+        raise OSError(errno.EXDEV, "Invalid cross-device link")
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError) as info:
+        m.stage("stats", _stats_fn, [src], {"min_chars": 0})
+    monkeypatch.undo()
+    key = m.stage_key(
+        "stats", [src], {"min_chars": 0},
+        __import__(
+            "pylluminator_spark.plans.manifest", fromlist=["x"]
+        )._fn_fingerprint(_stats_fn),
+    )
+    assert os.path.join(root, key) in str(info.value)
+    assert info.value.errno == errno.EXDEV
+    assert [f for f in os.listdir(root) if ".tmp-" in f] == []
+    assert m.entry(key) is None
+    ref = m.stage("stats", _stats_fn, [src], {"min_chars": 0})
+    assert ref.key == key and not ref.from_cache

@@ -153,3 +153,28 @@ def test_pipeline_masks_are_store_backed(spark, signal, tmp_path):
         poobah_threshold=0.05,
     )
     assert piped.masks.count() == ref.masks.count()
+
+
+def test_unchanged_rerun_launches_no_job(spark, signal, tmp_path, count_jobs):
+    """A cache-hit re-run on the same session launches no Spark job
+    before its output is read: the masks fingerprint is memoized per
+    frame and every stage read carries its ledger schema."""
+    from pyspark.sql import functions as F
+
+    from pylluminator_spark.plans.session import min_beads_masks
+
+    # lazily derived masks, like from_idata's min-beads masks
+    low = signal.withColumn("mg", F.when(F.col("mg") >= 100, F.col("mg")))
+    sess = MethylSession(
+        spark=spark, signal=signal, masks=min_beads_masks(low, 3)
+    )
+    m = PipelineManifest(spark, str(tmp_path / "pl"))
+    first, _ = sess.run_pipeline(m, source_fingerprint="fixture-v1")
+    want = _betas_pdf(first.betas(apply_mask=True))
+    with count_jobs() as jobs:
+        again, refs = sess.run_pipeline(m, source_fingerprint="fixture-v1")
+    assert jobs["n"] == 0
+    assert all(r.from_cache for r in refs.values())
+    got = _betas_pdf(again.betas(apply_mask=True))
+    pd.testing.assert_frame_equal(got, want)
+    assert got["beta"].isna().any()  # the masks bind
